@@ -29,7 +29,10 @@ so they stay inside whole-stage codegen and scale with the cluster.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 
 def clean(
@@ -235,23 +238,20 @@ def ewma(
     Seam shape (r18, guide §4.5 — the ``finance.macd`` fix): a
     ``groupBy(key).applyInPandas`` invokes Python once PER GROUP, and
     with numerous small keys the ~4 ms per-invocation overhead
-    dominates the fold itself.  The loop now rides ``mapInPandas``
-    over a key-repartitioned, key-sorted frame — one Python invocation
-    per Arrow batch, the batch-boundary key carried into the next
-    batch so every group still folds contiguously.
+    dominates the fold itself.  The loop therefore rides
+    :func:`arrow_batch_fold` — one Python invocation per Arrow batch.
 
     NULL-key rows bypass the grouped fold entirely and emit NULL (the
-    moving_average gotcha-2 convention, and the streaming twin's
-    passthrough): folding them as one pseudo-key would chain an EWMA
-    across unrelated keyless rows.
+    moving_average gotcha-2 convention, and the streaming twin's):
+    folding them as one pseudo-key would chain an EWMA across
+    unrelated keyless rows.  Float-NaN keys form one group, as in
+    Spark's groupBy.
 
     Scale: one shuffle on ``key``; per-batch memory is the Arrow batch
     plus at most one carried group — for very large single keys,
     pre-bucket by a coarse time range and stitch (same pattern as
     operators/asof.py).
     """
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     # a fresh StructType: StructType.add would mutate df's own schema
     out_schema = StructType(
         list(df.schema.fields) + [StructField(out_col, DoubleType())]
@@ -270,7 +270,8 @@ def ewma(
         prev_key = object()
         out = []
         for kv, v in zip(pdf[key], pdf[value]):
-            if kv != prev_key:
+            # NaN-aware: Spark groups all float-NaN keys together
+            if not (kv == prev_key or (pd.isna(kv) and pd.isna(prev_key))):
                 state, prev_key = None, kv
             if v is None or pd.isna(v):
                 out.append(None)
@@ -281,34 +282,62 @@ def ewma(
         pdf[out_col] = pd.Series(out, index=pdf.index, dtype="float64")
         return pdf[cols + [out_col]]
 
-    def fold_batches(batches):
-        import pandas as pd
-
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-            if not len(pdf):
-                continue
-            # hold back the trailing group: its remaining rows may
-            # arrive in the next batch (keys are non-null here, and
-            # rows are key-sorted within the partition)
-            tail_mask = pdf[key] == pdf[key].iloc[-1]
-            head = pdf[~tail_mask]
-            carry = pdf[tail_mask]
-            if len(head):
-                yield fold(head)
-        if carry is not None and len(carry):
-            yield fold(carry)
-
     keyed = df.filter(F.col(key).isNotNull())
     passthrough = df.filter(F.col(key).isNull()).withColumn(
         out_col, F.lit(None).cast("double")
     )
+    return arrow_batch_fold(keyed, fold, out_schema, key, sort_cols).unionByName(
+        passthrough
+    )
+
+
+def arrow_batch_fold(
+    df: DataFrame,
+    fold: Callable,
+    schema: StructType,
+    key: str,
+    order_by: Sequence[str],
+) -> DataFrame:
+    """Apply a per-key pandas ``fold`` with one Python call per Arrow
+    batch instead of one per group (``groupBy.applyInPandas``).
+
+    ``df`` is repartitioned on ``key`` and sorted on
+    ``(key, *order_by)`` within each partition, so every key is one
+    contiguous run.  ``fold(pdf)`` receives whole runs only and returns
+    the rows of ``schema``: each batch's trailing run is held back
+    until the key changes or the partition ends, since its remaining
+    rows may sit in the next batch.  Held-back chunks are collected in
+    a list and concatenated once, so a key spanning many batches costs
+    linear copying, not quadratic.  Key equality is NaN-aware: Spark
+    groups all float-NaN keys together, so the tail mask does too.
+
+    Memory: the Arrow batch plus at most one held-back key run.
+    """
+
+    def fold_batches(batches):
+        import pandas as pd
+
+        held = []  # chunks of the trailing key run
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            keys = pdf[key]
+            last = keys.iloc[-1]
+            tail = keys.isna() if pd.isna(last) else keys == last
+            if held and tail.all():
+                hk = held[0][key].iloc[0]
+                if pd.isna(last) if pd.isna(hk) else hk == last:
+                    held.append(pdf)
+                    continue
+            done = [c for c in (*held, pdf[~tail]) if len(c)]
+            held = [pdf[tail]]
+            if done:
+                yield fold(pd.concat(done, ignore_index=True))
+        if held:
+            yield fold(pd.concat(held, ignore_index=True))
+
     return (
-        keyed.repartition(key)
-        .sortWithinPartitions(key, *sort_cols)
-        .mapInPandas(fold_batches, schema=out_schema)
-        .unionByName(passthrough)
+        df.repartition(key)
+        .sortWithinPartitions(key, *order_by)
+        .mapInPandas(fold_batches, schema=schema)
     )

@@ -43,6 +43,7 @@ from financial_data_stream_processing_engine_spark.functions.numeric import (
     dsum,
     qint,
 )
+from financial_data_stream_processing_engine_spark.operators.core import arrow_batch_fold
 
 #: descale factors for quantized-integer sums (see numeric.QSCALE):
 #: first moments carry one 1e-9 grid factor, second moments two.
@@ -508,13 +509,12 @@ def macd(
     Seam shape (r18, guide §4.5): ``applyInPandas`` invokes the Python
     function ONCE PER GROUP, and the per-invocation overhead — measured
     ~4 ms × 1 500 symbol groups ≈ 6.5 s of a 6.9 s solo run at sf0.1 —
-    dominates everything else in the entry.  So the fold now rides
-    ``mapInPandas`` over a key-repartitioned, key-sorted frame: one
-    Python invocation per ARROW BATCH (thousands of rows), with the
-    batch-boundary symbol carried into the next batch so every group
-    still folds contiguously, and the EMA recurrences run as ONE
-    grouped ``ewm`` Cython call per batch.  Same shuffle, same
-    per-group memory bound, ~150× fewer JVM↔Python crossings.
+    dominates everything else in the entry.  So the fold rides
+    :func:`~financial_data_stream_processing_engine_spark.operators.core.arrow_batch_fold`:
+    one Python invocation per ARROW BATCH (thousands of rows), whole
+    symbol groups only, and the EMA recurrences run as ONE grouped
+    ``ewm`` Cython call per batch.  Same shuffle, same per-group
+    memory bound, ~150× fewer JVM↔Python crossings.
 
     Determinism: per row the op order is fixed — advance fast EMA,
     advance slow EMA, subtract (macd), advance signal EMA on the macd
@@ -570,33 +570,7 @@ def macd(
         pdf["macd_histogram"] = pdf["macd"] - pdf["macd_signal"]
         return pdf[cols + ["macd", "macd_signal", "macd_histogram"]]
 
-    def fold_batches(batches):
-        import pandas as pd
-
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
-            if not len(pdf):
-                continue
-            # hold back the batch's trailing group: its remaining rows
-            # may arrive in the next batch (rows are key-sorted within
-            # the partition, so a group is always a contiguous run)
-            last = pdf[key].iloc[-1]
-            tail_mask = pdf[key].isna() if pd.isna(last) else (pdf[key] == last)
-            head = pdf[~tail_mask]
-            carry = pdf[tail_mask]
-            if len(head):
-                yield fold(head)
-        if carry is not None and len(carry):
-            yield fold(carry)
-
-    return (
-        df.repartition(key)
-        .sortWithinPartitions(key, *sort_cols)
-        .mapInPandas(fold_batches, schema=out_schema)
-    )
+    return arrow_batch_fold(df, fold, out_schema, key, sort_cols)
 
 
 def atr(

@@ -26,7 +26,8 @@ def _default_driver_mem(master: str) -> str:
         return "1g"
     slots = os.cpu_count() or 1
     if "[" in master:
-        n = master[master.index("[") + 1 : master.rindex("]")]
+        # local[N] or local[N,maxFailures]: the slot count comes first
+        n = master[master.index("[") + 1 : master.rindex("]")].split(",")[0]
         if n != "*":
             try:
                 slots = max(1, int(n))

@@ -1,28 +1,48 @@
-"""Stateful streaming: the row-count moving average (SURVEY.md §7 hard
-part #1).
+"""Stateful streaming: per-key folds over a tick stream (SURVEY.md §7
+hard part #1).
 
 Spark's native streaming windows are time-based; the reference's
 flagship operator is a row-count window per key (deque(maxlen=N),
 financial_engine.py:305).  Streaming parity therefore needs custom
-keyed state: ``applyInPandasWithState`` with a per-key ring buffer.
+keyed state via ``applyInPandasWithState``.  The operators here:
 
-Differences from the reference, by design:
-* state carries a TTL (ProcessingTimeTimeout) — the reference leaks
-  state forever for unbounded key sets (:298), which cannot survive
-  100 TB key cardinalities;
-* arrival order is defined as (ts, id) within each micro-batch — the
+* ``streaming_moving_average`` — row-count MA, ring buffer of <=n prices;
+* ``streaming_ewma`` — EWMA, one double;
+* ``streaming_macd`` — MACD, three doubles;
+* ``streaming_zscore_alerts`` — causal z-score alerts, ring buffer;
+* ``streaming_pattern_distance`` — sliding-window pattern distance,
+  ring buffer;
+* ``streaming_sessionize_timeout`` — gap sessions flushed by an
+  event-time timeout.
+
+The first five share ONE keyed-state contract, owned by ``_keyed_fold``
+(each operator supplies only its initial state, per-row step and
+output columns):
+
+* arrival order: (ts, numeric id, id) within each micro-batch — the
   reference's asyncio task ordering is nondeterministic anyway
-  (SURVEY.md §3.2), so we define a deterministic order instead.
+  (SURVEY.md §3.2), so we define a deterministic order instead;
+* key participation: a non-participating key (NULL; for the MA also
+  ``''``, the reference's truthiness test, :303) rides the same grouped
+  call, gets NULL outputs and stores no state;
+* TTL: state carries a ProcessingTimeTimeout of ``ttl_ms`` — the
+  reference leaks state forever for unbounded key sets (:298), which
+  cannot survive 100 TB key cardinalities.  ``ttl_ms=None`` means
+  NoTimeout.
+
+Sessionization keeps its own direct call: it emits on an event-time
+timeout, which the contract above never does.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import DataType
 
 OUTPUT_SCHEMA = (
     "id string, symbol string, price double, volume bigint, ts timestamp, "
@@ -54,6 +74,84 @@ def _sorted_batch(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
     )
 
 
+def _keyed_fold(
+    ticks: DataFrame,
+    *,
+    init: tuple,
+    step: Callable[[tuple, float | None], tuple[tuple, tuple | None]],
+    out_cols: tuple[str, ...],
+    output_schema: str,
+    state_schema: str,
+    ttl_ms: int | None,
+    participates: Callable[[Any], bool] = lambda k: k is not None,
+) -> DataFrame:
+    """Fold ``step`` over each symbol's prices in arrival order, with
+    the per-key state held by ``applyInPandasWithState``.
+
+    ``step(state, price) -> (state, out)`` sees the state tuple (shape
+    ``state_schema``; ``init`` for a new key) and the row's price
+    (None for NULL/NaN).  It must not mutate the state it is given.
+    ``out`` holds the row's ``out_cols`` values (doubles), or is None
+    to drop the row.  Every other column of ``output_schema`` is copied
+    from the input row.
+
+    A key for which ``participates`` is false goes through the same
+    grouped call: its rows are emitted with NULL outputs, and it never
+    writes or arms state — so the NULL key needs no separate
+    passthrough scan of the source.
+    """
+    names = DataType.fromDDL(output_schema).names
+    keep = [c for c in names if c not in out_cols]
+    null_out = (None,) * len(out_cols)
+
+    def update(
+        key: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        live = participates(key[0])
+        st = state.get if state.exists else init
+        pdf = _sorted_batch(pdfs)
+        if pdf is not None:
+            idx, outs = [], []
+            for i, price in zip(pdf.index, pdf["price"]):
+                out = null_out
+                if live:
+                    st, out = step(st, None if pd.isna(price) else float(price))
+                if out is not None:
+                    idx.append(i)
+                    outs.append(out)
+            if idx:
+                cols = zip(out_cols, zip(*outs))
+                yield pdf.loc[idx, keep].assign(
+                    **{c: pd.Series(v, index=idx, dtype="float64") for c, v in cols}
+                )[names]
+        if live:
+            state.update(st)
+            if ttl_ms is not None:
+                state.setTimeoutDuration(ttl_ms)
+
+    # NoTimeout when TTL is disabled: with ProcessingTimeTimeout the
+    # engine schedules continuous empty micro-batches purely to check
+    # timeouts, which also keeps processAllAvailable() from settling in
+    # synchronous tests.
+    timeout_conf = (
+        GroupStateTimeout.ProcessingTimeTimeout
+        if ttl_ms is not None
+        else GroupStateTimeout.NoTimeout
+    )
+    return ticks.groupBy("symbol").applyInPandasWithState(
+        update,
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=timeout_conf,
+    )
+
+
 def streaming_moving_average(
     ticks: DataFrame,
     n: int = 5,
@@ -65,6 +163,8 @@ def streaming_moving_average(
     financial_engine.py:293-312): NULL until exactly ``n`` prices have
     been buffered for the key, then the sliding mean of the last ``n``.
     Sum order is oldest→newest (matches the reference's ``sum(deque)``).
+    NULL prices emit NULL and take no slot; NULL and ``''`` symbols
+    (the reference's truthiness test, :303) keep no state.
 
     State: one double[<=n] ring buffer per key — O(n) bytes; expired
     after ``ttl_ms`` without traffic.  Scale: state store shards by the
@@ -72,58 +172,18 @@ def streaming_moving_average(
     is tiny and the per-batch work is O(batch rows).
     """
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (prices,) = state.get if state.exists else ([],)
-        prices = list(prices)
-        pdf = _sorted_batch(pdfs)
-        if pdf is not None:
-            mas = []
-            for price in pdf["price"]:
-                ma = None
-                if price is not None and not pd.isna(price):
-                    prices.append(float(price))
-                    if len(prices) > n:
-                        del prices[: len(prices) - n]
-                    if len(prices) == n:
-                        ma = sum(prices) / n  # oldest→newest, like sum(deque)
-                mas.append(ma)
-            out = pdf.copy()
-            out["moving_average"] = pd.Series(mas, index=pdf.index, dtype="float64")
-            yield out
-        state.update((prices,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
+    def step(st, p):
+        if p is None:
+            return st, (None,)
+        prices = (st[0] + [p])[-n:]
+        # oldest→newest, like sum(deque)
+        return (prices,), (sum(prices) / n if len(prices) == n else None,)
 
-    # NULL-symbol rows never enter keyed state in the reference (:303);
-    # route them around the stateful op untouched (union back with NULL ma).
-    keyed = ticks.filter(ticks.symbol.isNotNull())
-    passthrough = ticks.filter(ticks.symbol.isNull()).withColumn(
-        "moving_average", F.lit(None).cast("double")
+    return _keyed_fold(
+        ticks, init=([],), step=step, out_cols=("moving_average",),
+        output_schema=OUTPUT_SCHEMA, state_schema=STATE_SCHEMA,
+        ttl_ms=ttl_ms, participates=bool,
     )
-    # NoTimeout when TTL is disabled: with ProcessingTimeTimeout the
-    # engine schedules continuous empty micro-batches purely to check
-    # timeouts, which also keeps processAllAvailable() from settling in
-    # synchronous tests.
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    out = keyed.groupBy("symbol").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout_conf,
-    )
-    return out.unionByName(passthrough)
 
 
 EWMA_OUTPUT_SCHEMA = (
@@ -141,56 +201,23 @@ def streaming_ewma(
     """Per-symbol EWMA over a tick stream — the streaming twin of
     operators.core.ewma: s_i = α·v_i + (1-α)·s_{i-1}, state = ONE
     double per key (the smallest possible keyed state; compare the
-    ring buffer the row-count MA needs).
-
-    Batch order is defined like streaming_moving_average: whole group
-    buffered, sorted by (ts, numeric id).  NULL prices emit NULL and
-    carry state; NULL symbols bypass keyed state entirely.
+    ring buffer the row-count MA needs).  NULL prices emit NULL and
+    carry state; NULL symbols keep no state and emit NULL.
     """
     a, b = float(alpha), 1.0 - float(alpha)
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (s,) = state.get if state.exists else (None,)
-        pdf = _sorted_batch(pdfs)
-        if pdf is not None:
-            out = []
-            for price in pdf["price"]:
-                if price is None or pd.isna(price):
-                    out.append(None)
-                    continue
-                s = float(price) if s is None else a * float(price) + b * s
-                out.append(s)
-            res = pdf.copy()
-            res["ewma"] = pd.Series(out, index=pdf.index, dtype="float64")
-            yield res
-        state.update((s,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
+    def step(st, p):
+        if p is None:
+            return st, (None,)
+        (s,) = st
+        s = p if s is None else a * p + b * s
+        return (s,), (s,)
 
-    keyed = ticks.filter(ticks.symbol.isNotNull())
-    passthrough = ticks.filter(ticks.symbol.isNull()).withColumn(
-        "ewma", F.lit(None).cast("double")
+    return _keyed_fold(
+        ticks, init=(None,), step=step, out_cols=("ewma",),
+        output_schema=EWMA_OUTPUT_SCHEMA, state_schema=EWMA_STATE_SCHEMA,
+        ttl_ms=ttl_ms,
     )
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    out = keyed.groupBy("symbol").applyInPandasWithState(
-        update,
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout_conf,
-    )
-    return out.unionByName(passthrough)
 
 
 MACD_OUTPUT_SCHEMA = (
@@ -214,69 +241,28 @@ def streaming_macd(
     Per row the op order matches the batch fold exactly — advance fast,
     advance slow, subtract, advance signal, subtract — so
     streaming/batch/oracle agreement is bitwise.  NULL prices emit NULL
-    and carry state; NULL symbols bypass keyed state.  Like the other
-    stateful ops, arrival order is defined as (ts, numeric id) within
-    each micro-batch, and state carries a TTL.
+    and carry state; NULL symbols keep no state and emit NULL.
     """
     af, bf = 2.0 / (fast + 1.0), 1.0 - 2.0 / (fast + 1.0)
     as_, bs = 2.0 / (slow + 1.0), 1.0 - 2.0 / (slow + 1.0)
     ag, bg = 2.0 / (signal + 1.0), 1.0 - 2.0 / (signal + 1.0)
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        ef, es, sig = state.get if state.exists else (None, None, None)
-        pdf = _sorted_batch(pdfs)
-        if pdf is not None:
-            m_out, s_out, h_out = [], [], []
-            for price in pdf["price"]:
-                if price is None or pd.isna(price):
-                    m_out.append(None)
-                    s_out.append(None)
-                    h_out.append(None)
-                    continue
-                v = float(price)
-                ef = v if ef is None else af * v + bf * ef
-                es = v if es is None else as_ * v + bs * es
-                m = ef - es
-                sig = m if sig is None else ag * m + bg * sig
-                m_out.append(m)
-                s_out.append(sig)
-                h_out.append(m - sig)
-            res = pdf.copy()
-            res["macd"] = pd.Series(m_out, index=pdf.index, dtype="float64")
-            res["macd_signal"] = pd.Series(s_out, index=pdf.index, dtype="float64")
-            res["macd_histogram"] = pd.Series(h_out, index=pdf.index, dtype="float64")
-            yield res
-        state.update((ef, es, sig))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
+    def step(st, p):
+        if p is None:
+            return st, (None, None, None)
+        ef, es, sig = st
+        ef = p if ef is None else af * p + bf * ef
+        es = p if es is None else as_ * p + bs * es
+        m = ef - es
+        sig = m if sig is None else ag * m + bg * sig
+        return (ef, es, sig), (m, sig, m - sig)
 
-    keyed = ticks.filter(ticks.symbol.isNotNull())
-    passthrough = (
-        ticks.filter(ticks.symbol.isNull())
-        .withColumn("macd", F.lit(None).cast("double"))
-        .withColumn("macd_signal", F.lit(None).cast("double"))
-        .withColumn("macd_histogram", F.lit(None).cast("double"))
+    return _keyed_fold(
+        ticks, init=(None, None, None), step=step,
+        out_cols=("macd", "macd_signal", "macd_histogram"),
+        output_schema=MACD_OUTPUT_SCHEMA, state_schema=MACD_STATE_SCHEMA,
+        ttl_ms=ttl_ms,
     )
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    out = keyed.groupBy("symbol").applyInPandasWithState(
-        update,
-        outputStructType=MACD_OUTPUT_SCHEMA,
-        stateStructType=MACD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout_conf,
-    )
-    return out.unionByName(passthrough)
 
 
 ZSCORE_OUTPUT_SCHEMA = (
@@ -312,85 +298,38 @@ def streaming_zscore_alerts(
 
     quant = Decimal("0.0000001")
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (prices,) = state.get if state.exists else ([],)
-        prices = list(prices)
-        pdf = _sorted_batch(pdfs)
-        if pdf is not None:
-            mus, sds, zs, keep = [], [], [], []
-            for price in pdf["price"]:
-                flag = False
-                mu = sd = z = None
-                p = None if price is None or pd.isna(price) else float(price)
-                if p is not None:
-                    # batch parity: the ROWS −n..−1 frame counts every
-                    # row as a slot and requires count(price) == n, so
-                    # a window containing a NULL price never scores —
-                    # the buffer mirrors that by storing NULL slots
-                    # (appended below) and scoring only all-non-null
-                    # full windows
-                    if len(prices) == n and not any(
-                        v is None for v in prices
-                    ):
-                        sx = float(
-                            sum(
-                                Decimal(repr(v)).quantize(quant, ROUND_HALF_UP)
-                                for v in prices
-                            )
-                        )
-                        sxx = float(
-                            sum(
-                                Decimal(repr(v * v)).quantize(quant, ROUND_HALF_UP)
-                                for v in prices
-                            )
-                        )
-                        mu = sx / float(n)
-                        var = (sxx - sx * sx / float(n)) / float(n - 1)
-                        # math.sqrt is correctly rounded (IEEE), matching
-                        # the batch plan's SQRT; `** 0.5` (libm pow) is not
-                        # guaranteed to be
-                        sd = math.sqrt(max(var, 0.0))
-                        z = (p - mu) / sd if sd != 0.0 else None
-                        flag = z is not None and abs(z) >= z_threshold
-                # EVERY row consumes a buffer slot, NULL prices
-                # included — exactly like the batch ROWS frame
-                prices.append(p)
-                if len(prices) > n:
-                    del prices[: len(prices) - n]
-                mus.append(mu)
-                sds.append(sd)
-                zs.append(z)
-                keep.append(flag)
-            out = pdf.copy()
-            out["baseline_mean"] = pd.Series(mus, index=pdf.index, dtype="float64")
-            out["baseline_sd"] = pd.Series(sds, index=pdf.index, dtype="float64")
-            out["zscore"] = pd.Series(zs, index=pdf.index, dtype="float64")
-            out = out[pd.Series(keep, index=pdf.index)]
-            if len(out):
-                yield out
-        state.update((prices,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
+    def step(st, p):
+        (prices,) = st
+        z = None
+        # batch parity: the ROWS −n..−1 frame counts every row as a
+        # slot and requires count(price) == n, so a window containing a
+        # NULL price never scores — the buffer mirrors that by storing
+        # NULL slots and scoring only all-non-null full windows
+        if p is not None and len(prices) == n and not any(v is None for v in prices):
+            sx = float(
+                sum(Decimal(repr(v)).quantize(quant, ROUND_HALF_UP) for v in prices)
+            )
+            sxx = float(
+                sum(Decimal(repr(v * v)).quantize(quant, ROUND_HALF_UP) for v in prices)
+            )
+            mu = sx / float(n)
+            var = (sxx - sx * sx / float(n)) / float(n - 1)
+            # math.sqrt is correctly rounded (IEEE), matching the batch
+            # plan's SQRT; `** 0.5` (libm pow) is not guaranteed to be
+            sd = math.sqrt(max(var, 0.0))
+            z = (p - mu) / sd if sd != 0.0 else None
+        # EVERY row consumes a buffer slot, NULL prices included —
+        # exactly like the batch ROWS frame
+        st = ((prices + [p])[-n:],)
+        if z is None or abs(z) < z_threshold:
+            return st, None
+        return st, (mu, sd, z)
 
-    keyed = ticks.filter(ticks.symbol.isNotNull())
-    timeout_conf = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return keyed.groupBy("symbol").applyInPandasWithState(
-        update,
-        outputStructType=ZSCORE_OUTPUT_SCHEMA,
-        stateStructType=ZSCORE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout_conf,
+    return _keyed_fold(
+        ticks.filter(ticks.symbol.isNotNull()), init=([],), step=step,
+        out_cols=("baseline_mean", "baseline_sd", "zscore"),
+        output_schema=ZSCORE_OUTPUT_SCHEMA, state_schema=ZSCORE_STATE_SCHEMA,
+        ttl_ms=ttl_ms,
     )
 
 
@@ -530,68 +469,34 @@ def streaming_pattern_distance(
         raise ValueError("query pattern has zero variance")
     zq = [(q - qm) / qs for q in qvals]
 
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        import math as _math
+    def step(st, p):
+        # batch parity: the lag-chain counts every ROW as a window
+        # slot, and any window containing a NULL price yields NULL
+        # stats (dropped) — so NULL prices consume a slot here too and
+        # poison the windows they sit in
+        prices = (st[0] + [p])[-length:]
+        st = (prices,)
+        if p is None or len(prices) < length or any(v is None for v in prices):
+            return st, None
+        m_acc = prices[0]
+        for v in prices[1:]:
+            m_acc = m_acc + v
+        m = m_acc / float(length)
+        v_acc = (prices[0] - m) * (prices[0] - m)
+        for v in prices[1:]:
+            v_acc = v_acc + (v - m) * (v - m)
+        s = math.sqrt(v_acc / float(length))
+        if not s > 0:
+            return st, None
+        d0 = (prices[0] - m) / s - zq[0]
+        d_acc = d0 * d0
+        for i in range(1, length):
+            di = (prices[i] - m) / s - zq[i]
+            d_acc = d_acc + di * di
+        return st, (d_acc,)
 
-        if state.hasTimedOut:
-            state.remove()
-            return
-        (prices,) = state.get if state.exists else ([],)
-        prices = list(prices)
-        pdf = _sorted_batch(pdfs)
-        if pdf is not None:
-            out_rows = []
-            for row in pdf.itertuples(index=False):
-                price = row.price
-                # batch parity: the lag-chain counts every ROW as a
-                # window slot, and any window containing a NULL price
-                # yields NULL stats (dropped) — so NULL prices consume
-                # a slot here too and poison the windows they sit in
-                p = None if price is None or pd.isna(price) else float(price)
-                prices.append(p)
-                if len(prices) > length:
-                    del prices[: len(prices) - length]
-                if p is None or len(prices) < length or any(
-                    v is None for v in prices
-                ):
-                    continue
-                m_acc = prices[0]
-                for v in prices[1:]:
-                    m_acc = m_acc + v
-                m = m_acc / float(length)
-                v_acc = (prices[0] - m) * (prices[0] - m)
-                for v in prices[1:]:
-                    v_acc = v_acc + (v - m) * (v - m)
-                s = _math.sqrt(v_acc / float(length))
-                if not s > 0:
-                    continue
-                d0 = (prices[0] - m) / s - zq[0]
-                d_acc = d0 * d0
-                for i in range(1, length):
-                    di = (prices[i] - m) / s - zq[i]
-                    d_acc = d_acc + di * di
-                out_rows.append((row.id, row.symbol, row.ts, d_acc))
-            if out_rows:
-                yield pd.DataFrame(
-                    out_rows, columns=["id", "symbol", "ts", "dist"]
-                )
-        state.update((prices,))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return ticks.filter(ticks.symbol.isNotNull()).groupBy("symbol").applyInPandasWithState(
-        update,
-        outputStructType=PATTERN_OUT_SCHEMA,
-        stateStructType=PATTERN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _keyed_fold(
+        ticks.filter(ticks.symbol.isNotNull()), init=([],), step=step,
+        out_cols=("dist",), output_schema=PATTERN_OUT_SCHEMA,
+        state_schema=PATTERN_STATE_SCHEMA, ttl_ms=ttl_ms,
     )

@@ -552,8 +552,9 @@ def test_macd_batched_seam_straddles_arrow_batches(spark):
 
 def test_ewma_batched_seam_straddles_arrow_batches(spark):
     """Same straddle pin for core.ewma's r18 mapInPandas fold — with
-    NULL values (carry state, emit NULL) and NULL keys (passthrough)
-    in play."""
+    NULL values (carry state, emit NULL), NULL keys (passthrough) and a
+    float-NaN key (one group, as in Spark's groupBy) spanning several
+    2-row Arrow batches in play."""
     from financial_data_stream_processing_engine_spark.operators.core import ewma
 
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
@@ -562,8 +563,9 @@ def test_ewma_batched_seam_straddles_arrow_batches(spark):
         rows = []
         expected = {}
         rid = 0
-        for sym in (1, 2, 3):
-            vals = [1.0, None, 2.0, 4.0, None, 8.0][: 3 + sym]
+        # the NaN key's 7 rows span four 2-row batches
+        for n_vals, sym in enumerate((1.0, 2.0, 3.0, float("nan")), start=4):
+            vals = [1.0, None, 2.0, 4.0, None, 8.0, 3.0][:n_vals]
             state = None
             for v in vals:
                 rows.append((rid, sym, BASE + dt.timedelta(minutes=rid), v, 0))
@@ -575,7 +577,7 @@ def test_ewma_batched_seam_straddles_arrow_batches(spark):
                 rid += 1
         rows.append((rid, None, BASE + dt.timedelta(minutes=rid), 5.0, 0))
         expected[rid] = None  # NULL key: passthrough, NULL ewma
-        df = spark.createDataFrame(rows, TICK_SCHEMA)
+        df = spark.createDataFrame(rows, TICK_SCHEMA.replace("symbol long", "symbol double"))
         got = {
             r["event_id"]: r["ewma"]
             for r in ewma(df, order_by=("ts", "event_id")).collect()

@@ -26,6 +26,8 @@ def tick_dir(spark, tmp_path_factory):
     rows = []
     for i in range(240):
         sym = ["AAA", "BBB", "CCC"][i % 3] if i % 17 else None  # sprinkle NULL keys
+        if sym and i % 19 == 0:
+            sym = ""  # and '' keys: falsy, so no MA state either
         rows.append(
             (
                 f"t{i:04d}",
@@ -54,7 +56,10 @@ def _run_to_memory(df, name, mode="append"):
 
 def test_stateful_row_count_ma_matches_batch(spark, tick_dir):
     out = stateful.streaming_moving_average(_stream(spark, tick_dir), n=5, ttl_ms=None)
-    _run_to_memory(out, "ma_stream")
+    q = sinks.memory_sink(out, "ma_stream")
+    q.processAllAvailable()
+    state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
+    q.stop()
     got = {r.id: r.moving_average for r in spark.table("ma_stream").collect()}
 
     batch = spark.read.parquet(tick_dir)
@@ -68,9 +73,13 @@ def test_stateful_row_count_ma_matches_batch(spark, tick_dir):
             assert got[k] is None, k
         else:
             assert got[k] == pytest.approx(exp[k], rel=1e-12), k
-    # NULL-symbol rows passed through with NULL ma
+    # NULL- and ''-symbol rows passed through with NULL ma ...
     null_ids = {r.id for r in batch.filter("symbol is null").collect()}
-    assert null_ids and all(got[i] is None for i in null_ids)
+    empty_ids = {r.id for r in batch.filter("symbol = ''").collect()}
+    assert null_ids and empty_ids
+    assert all(got[i] is None for i in null_ids | empty_ids)
+    # ... and hold no state: one state row per non-empty symbol
+    assert state_rows == 3
 
 
 def test_tumbling_window_matches_batch(spark, tick_dir):
